@@ -1,12 +1,13 @@
-"""Tracked eager localCheckpoint with an explicit release handle.
+"""Tracked eager localCheckpoint with an explicit release handle and
+observed aggregates that ride the checkpoint job.
 
-Iterative operators (BPE training, connected components, Lloyd k-means)
-truncate their growing lineage with an eager ``localCheckpoint`` every
-iteration. The checkpoint blocks are RDD-level persists, and
-``DataFrame.unpersist()`` does NOT free them (it only uncaches
-cache-manager entries — verified empirically on Spark 4: the persistent
-RDD count is unchanged after ``df.unpersist()``). Without an explicit
-release, n_iterations copies of the working set accumulate in
+Iterative operators (BPE training, connected components, k-core
+peeling, PageRank) truncate their growing lineage with an eager
+``localCheckpoint`` every iteration. The checkpoint blocks are RDD-level
+persists, and ``DataFrame.unpersist()`` does NOT free them (it only
+uncaches cache-manager entries — verified empirically on Spark 4: the
+persistent RDD count is unchanged after ``df.unpersist()``). Without an
+explicit release, n_iterations copies of the working set accumulate in
 block-manager storage for the life of the session — on a 1000-executor
 cluster iterating over a 100 TB working set, that is an executor-memory
 leak, not a nicety.
@@ -19,13 +20,33 @@ ids the checkpoint created. After ``release()``, the checkpointed
 DataFrame itself is unusable (its lineage was truncated) — callers must
 only release iteration N's checkpoint after iteration N+1's checkpoint
 has materialized (``eager=True`` guarantees that on return).
+
+Loops also need a scalar per round — a row count, a convergence sum, a
+checksum, per-partition counts for a prefix sum. Reading it with a
+separate action (``cp.count()``, ``cp.agg(...).first()``) costs one or
+two more Spark jobs per round. Instead the caller passes the aggregates
+as ``metrics``: they are attached with ``df.observe`` and computed by
+the eager checkpoint job itself, as the rows stream into the block
+manager, so the scalar arrives with no extra job and no second read.
+
+Why the observed values are exact even when tasks are retried:
+``observe`` adds a ``CollectMetrics`` node on top of ``df``, so the
+metrics are accumulated in the checkpoint job's result stage (the count
+that materializes the blocks). Spark merges a result task's accumulator
+updates only for the first successful attempt of each partition; a
+failed attempt's partial updates are dropped, and a partition already
+counted is never merged twice. Every row is therefore counted exactly
+once, and it is the same row the checkpoint stored. On empty input
+(no partitions, or every row filtered out) a ``count`` reads ``0``,
+while ``sum``/``min``/``max``/``bit_xor`` read ``None`` — callers that
+observe those must handle it.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 def _persisted_ids(sc) -> set[int]:
@@ -45,8 +66,16 @@ def _unpersist_ids(sc, ids: set[int]) -> None:
             m.apply(rid).unpersist(False)
 
 
-def local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
-    """Eagerly localCheckpoint ``df``; return ``(checkpointed, release)``.
+def local_checkpoint(
+    df: DataFrame, *metrics: Column
+) -> tuple[DataFrame, Callable[[], None], dict[str, Any]]:
+    """Eagerly localCheckpoint ``df``; return ``(checkpointed, release,
+    observed)``.
+
+    ``metrics`` are aliased aggregate expressions over ``df``'s columns
+    (e.g. ``F.count(F.lit(1)).alias("n")``); ``observed`` maps each
+    alias to its value, computed by the checkpoint job itself (see the
+    module docstring). With no metrics, ``observed`` is empty.
 
     ``release()`` frees the checkpoint's block-manager storage. It is
     idempotent and safe to call after the session has moved on, but the
@@ -54,6 +83,9 @@ def local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     been materialized) must not be executed afterwards.
     """
     sc = df.sparkSession.sparkContext
+    obs = Observation() if metrics else None
+    if obs is not None:
+        df = df.observe(obs, *metrics)
     before = _persisted_ids(sc)
     cp = df.localCheckpoint(eager=True)
     created = _persisted_ids(sc) - before
@@ -61,4 +93,4 @@ def local_checkpoint(df: DataFrame) -> tuple[DataFrame, Callable[[], None]]:
     def release() -> None:
         _unpersist_ids(sc, created)
 
-    return cp, release
+    return cp, release, (obs.get if obs is not None else {})

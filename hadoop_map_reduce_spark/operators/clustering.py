@@ -13,7 +13,8 @@ components.
 Scale notes: the edge set is persisted (it drives two joins per
 iteration); labels are re-materialized each iteration via eager
 ``localCheckpoint`` to cut the growing lineage, and the convergence
-count reads the CHECKPOINTED result so no iteration executes twice.
+count is observed by that same checkpoint job, so no iteration executes
+twice and no extra count job runs.
 Each iteration's checkpoint blocks are released once the next
 checkpoint materializes (``hadoop_map_reduce_spark.checkpoint``), so
 block-manager storage holds one label table, not O(diameter) copies;
@@ -47,7 +48,7 @@ def connected_components(
         .distinct()
         .persist()
     )
-    labels, release = local_checkpoint(
+    labels, release, _ = local_checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
@@ -61,9 +62,9 @@ def connected_components(
                 .groupBy("src")
                 .agg(F.min("component").alias("nbr_min"))
             )
-            # Checkpoint FIRST (one execution), then read the convergence
-            # count from the materialized result.
-            updated, next_release = local_checkpoint(
+            # One execution per iteration: the checkpoint job also
+            # observes how many labels changed.
+            updated, next_release, seen = local_checkpoint(
                 labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
                 .select(
                     "node",
@@ -72,16 +73,16 @@ def connected_components(
                         F.coalesce("nbr_min", F.col("component")),
                     ).alias("component"),
                     F.col("component").alias("_old"),
-                )
+                ),
+                F.count_if(F.col("component") != F.col("_old")).alias("changed"),
             )
             # The new checkpoint is materialized; free the previous
             # iteration's blocks. The final checkpoint is never released
             # here — it backs the returned labels.
             release()
             release = next_release
-            changed = updated.filter(F.col("component") != F.col("_old")).count()
             labels = updated.select("node", "component")
-            if changed == 0:
+            if seen["changed"] == 0:
                 # Clear the handle BEFORE returning: the final
                 # checkpoint backs the returned labels and must stay
                 # alive; every other exit (non-convergence, mid-
@@ -231,48 +232,43 @@ def connected_components_loground(
     small-star contracts toward star forests) and each round ends in an
     eager ``localCheckpoint`` so the plan stays constant-size — the
     ``graph_kcore_bounded`` discipline. Convergence is detected from a
-    1-row canonical checksum of the checkpointed round result (bounded
-    scalar collect), so no round executes twice and a representation
-    change can never masquerade as progress.
+    canonical checksum the round's checkpoint job observes, so no round
+    executes twice and a representation change can never masquerade as
+    progress.
     """
     edges = pairs.select(
         F.col(id_a).cast("long").alias("u"),
         F.col(id_b).cast("long").alias("v"),
     ).filter(F.col("u") != F.col("v"))
-    star, release = local_checkpoint(edges)
+    star, release, _ = local_checkpoint(edges)
     prev_chk: tuple | None = None
     try:
         for rounds in range(1, max_rounds + 1):
-            nxt, next_release = local_checkpoint(
-                _small_star(_large_star(star))
+            # Order-insensitive set checksum via XOR-fold of two
+            # independent 64-bit hashes, observed by the round's
+            # checkpoint job: overflow-free at ANY edge count (an ANSI
+            # long SUM of bounded summands would still abort past
+            # ~2^32 edges — the 100-TB graphs this operator exists
+            # for), and rows within a round are distinct by
+            # construction so XOR cancellation needs a genuine 2^-128
+            # double-hash collision across rounds. An empty round
+            # reads (0, None, None), which repeats and so converges.
+            nxt, next_release, seen = local_checkpoint(
+                _small_star(_large_star(star)),
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(
+                    F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))
+                ).alias("x1"),
+                F.bit_xor(
+                    F.xxhash64(
+                        F.greatest("u", "v"), F.least("u", "v"), F.lit(13)
+                    )
+                ).alias("x2"),
             )
             release()
             release = next_release
             star = nxt
-            # Order-insensitive set checksum via XOR-fold of two
-            # independent 64-bit hashes: overflow-free at ANY edge
-            # count (an ANSI long SUM of bounded summands would still
-            # abort past ~2^32 edges — the 100-TB graphs this
-            # operator exists for), and rows within a round are
-            # distinct by construction so XOR cancellation needs a
-            # genuine 2^-128 double-hash collision across rounds.
-            chk = tuple(
-                star.agg(
-                    F.count(F.lit(1)),
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.least("u", "v"), F.greatest("u", "v")
-                        )
-                    ),
-                    F.bit_xor(
-                        F.xxhash64(
-                            F.greatest("u", "v"),
-                            F.least("u", "v"),
-                            F.lit(13),
-                        )
-                    ),
-                ).first()
-            )
+            chk = (seen["n"], seen["x1"], seen["x2"])
             if chk == prev_chk:
                 break
             prev_chk = chk

@@ -8,8 +8,10 @@ same exact global row rank with the standard distributed recipe:
    order (P fixed; an explicit partition count also keeps AQE from
    re-coalescing, though contiguous coalescing would stay correct).
 2. local ``row_number`` within each range partition,
-3. per-partition row counts (≤ P rows) joined into prefix-sum offsets
-   with a tiny non-equi self-join (build side ≤ P rows, broadcast),
+3. per-partition row counts (P scalars), observed by the eager
+   checkpoint job that materializes step 2 — no extra job, no
+   aggregate over the ranked rows; the driver turns them into prefix-sum
+   offsets and the total row count, which ride back as literals,
 4. global rank = partition offset + local rank; NTILE from the rank by
    the standard first-(N mod k)-buckets-get-one-extra rule.
 
@@ -22,9 +24,13 @@ scan-split sizing and shuffle layout — pinned by the invariance sweep.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from itertools import accumulate
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from hadoop_map_reduce_spark.checkpoint import local_checkpoint
+from hadoop_map_reduce_spark.functions.vectors import lit_longs
 
 _RANGE_PARTS = 32
 
@@ -38,54 +44,45 @@ def with_global_rank(
     must be a total order — add a unique tie-break), computed without
     any single-partition exchange.
 
-    The partition-id'd rows are eagerly ``localCheckpoint``ed before
-    fanning out to the offsets subtree and the probe subtree:
-    ``repartitionByRange`` samples its boundaries with a seed that
-    involves the materialization's RDD id, so if the two consumers
-    ever materialized the exchange independently (exchange reuse
-    disabled, or a future plan divergence), their ``_pid`` assignments
-    could disagree and the offsets would silently misalign. The
-    barrier pins ONE partition assignment for both consumers —
-    correctness by construction, not by optimizer courtesy. The
-    checkpointed set is the ranking input (e.g. a per-user table), not
-    the raw fact table."""
-    ranked, _ = _ranked_with_counts(df, order, out)
+    The partition-id'd rows are eagerly checkpointed, and that same job
+    observes the per-partition counts: ``repartitionByRange`` samples
+    its boundaries with a seed that involves the materialization's RDD
+    id, so two independent materializations of the exchange could
+    disagree on ``_pid`` and the offsets would silently misalign. The
+    checkpoint pins ONE partition assignment, and the counts are read
+    from exactly the rows it stored — correctness by construction, not
+    by optimizer courtesy. The checkpointed set is the ranking input
+    (e.g. a per-user table), not the raw fact table."""
+    ranked, _ = _ranked_with_total(df, order, out)
     return ranked
 
 
-def _ranked_with_counts(
+def _ranked_with_total(
     df: DataFrame, order: Sequence[Column], out: str
-) -> tuple[DataFrame, DataFrame]:
-    """(ranked rows, ≤P-row per-partition counts) — the counts are
-    exposed so NTILE's total comes from a bounded aggregate instead of
-    re-counting the ranked stream."""
+) -> tuple[DataFrame, int]:
+    """(ranked rows, total row count) — the total is exposed so NTILE's
+    bucket sizes are driver-side literals."""
     cols = list(df.columns)
-    rp = df.repartitionByRange(_RANGE_PARTS, *order)
-    local = (
-        rp.select(*cols, F.spark_partition_id().alias("_pid"))
+    # One SQL expression, not one Column per partition: building 32
+    # Columns through py4j cost ~0.1 s of driver time per call (4-core
+    # host, Spark 4.1).
+    per_part = ", ".join(f"count_if(_pid = {i})" for i in range(_RANGE_PARTS))
+    local, _, seen = local_checkpoint(
+        df.repartitionByRange(_RANGE_PARTS, *order)
+        .select(*cols, F.spark_partition_id().alias("_pid"))
         .withColumn(
             "_lrank",
-            F.row_number().over(
-                Window.partitionBy("_pid").orderBy(*order)
-            ),
-        )
-        .localCheckpoint(eager=True)
+            F.row_number().over(Window.partitionBy("_pid").orderBy(*order)),
+        ),
+        F.expr(f"array({per_part})").alias("_counts"),
     )
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    a, b = counts.alias("a"), counts.alias("b")
-    offsets = (
-        a.join(
-            F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left"
-        )
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(
-            F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off")
-        )
+    counts = seen["_counts"]
+    offsets = lit_longs(list(accumulate(counts, initial=0))[:-1])
+    ranked = local.select(
+        *cols,
+        (F.element_at(offsets, F.col("_pid") + 1) + F.col("_lrank")).alias(out),
     )
-    ranked = local.join(F.broadcast(offsets), "_pid").select(
-        *cols, (F.col("_off") + F.col("_lrank")).alias(out)
-    )
-    return ranked, counts
+    return ranked, sum(counts)
 
 
 def with_global_ntile(
@@ -95,28 +92,18 @@ def with_global_ntile(
     out: str,
 ) -> DataFrame:
     """``df`` plus the exact SQL ``NTILE(n) OVER (ORDER BY order)``
-    bucket (1-based), via :func:`with_global_rank` plus a broadcast
-    1-row total. Bucket rule matches the SQL standard: with N rows the
-    first ``N mod n`` buckets hold ``ceil(N/n)`` rows, the rest
+    bucket (1-based), via :func:`with_global_rank` and the observed row
+    total. Bucket rule matches the SQL standard: with N rows the first
+    ``N mod n`` buckets hold ``ceil(N/n)`` rows, the rest
     ``floor(N/n)``."""
     cols = list(df.columns)
-    ranked, counts = _ranked_with_counts(df, order, "_grank")
-    # Long `div`, not `/` — double division rounds above 2^53 rows,
-    # which would misbucket on a 100-TB input (the _frame_phashes
-    # discipline; r8 review finding).
-    total = counts.groupBy().agg(F.sum("_cnt").alias("_n")).select(
-        F.expr(f"_n div {n}").alias("_q"),
-        (F.col("_n") % n).alias("_r"),
+    ranked, total = _ranked_with_total(df, order, "_grank")
+    # Exact Python integers and long `div`, not `/` — double division
+    # rounds above 2^53 rows, which would misbucket on a 100-TB input.
+    q, r = divmod(total, n)
+    big = (q + 1) * r  # rows in ceil-sized buckets
+    bucket = F.expr(
+        f"CASE WHEN _grank <= {big}L THEN (_grank - 1) div {q + 1}L + 1 "
+        f"ELSE {r + 1}L + (_grank - {big + 1}L) div {max(q, 1)}L END"
     )
-    rank = F.col("_grank")
-    big = (F.col("_q") + 1) * F.col("_r")  # rows in ceil-sized buckets
-    bucket = F.when(
-        rank <= big, F.expr("(_grank - 1) div (_q + 1)") + 1
-    ).otherwise(
-        F.col("_r")
-        + 1
-        + F.expr("(_grank - (_q + 1) * _r - 1) div greatest(_q, 1L)")
-    )
-    return ranked.crossJoin(F.broadcast(total)).select(
-        *cols, bucket.cast("long").alias(out)
-    )
+    return ranked.select(*cols, bucket.cast("long").alias(out))

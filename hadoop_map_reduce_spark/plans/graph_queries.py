@@ -19,6 +19,8 @@ round-6 boundary scale.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,13 +32,13 @@ _DAMP = 0.85
 _ITERS = 3
 
 # Broadcast the per-iteration rank vector into the edges⋈ranks join only
-# while its just-counted row count is comfortably inside the broadcast
-# budget. Round-12 sizing (ADVICE r11 #2): a hashed relation costs far
-# more than the raw 16 key+value bytes per row (UnsafeRow + long-map
-# overhead, several x), so the cap budgets ~64 bytes/row — 1M rows ≈
-# 64 MB built, matching the session's autoBroadcastJoinThreshold. The
-# decision input is the runtime count, so behavior stays scale-adaptive:
-# a 100 TB graph with |V| > 1M falls back to the shuffled join shape.
+# while its observed row count is comfortably inside the broadcast
+# budget. A hashed relation costs far more than the raw 16 key+value
+# bytes per row (UnsafeRow + long-map overhead, several x), so the cap
+# budgets ~64 bytes/row — 1M rows ≈ 64 MB built, matching the session's
+# autoBroadcastJoinThreshold. The decision input is the runtime count,
+# so behavior stays scale-adaptive: a 100 TB graph with |V| > 1M falls
+# back to the shuffled join shape.
 _RANKS_BROADCAST_MAX = 1_000_000
 
 _GRAPH_SQL = f"""
@@ -73,6 +75,36 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _edges_with_outdeg(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Callable[[], None], int]:
+    """The directed edge stream with each row's ``outdeg``, eagerly
+    checkpointed once per invocation; returns ``(ew, release, n)`` with
+    ``n`` = |V|, observed by the checkpoint job.
+
+    ``outdeg`` rides a window count over the SAME src partitioning the
+    union already needs — one exchange of the edge stream, not a
+    separate degree aggregation + equi-join. ``_min_dst`` rides the same
+    window, so every node's smallest out-neighbour marks exactly one of
+    its rows: the (src, dst) rows are distinct — distinct customer →
+    supplier pairs plus their reverses, with the key spaces kept
+    disjoint by ``_SUPP_OFFSET``, the precondition the graph itself
+    rests on — so ``count_if(dst = _min_dst)`` is |V| with no
+    distinct-node job."""
+    from pyspark.sql import Window
+
+    from hadoop_map_reduce_spark.checkpoint import local_checkpoint
+
+    by_src = Window.partitionBy("src")
+    ew, release, seen = local_checkpoint(
+        _edges(spark, sf_dir)
+        .withColumn("outdeg", F.count(F.lit(1)).over(by_src))
+        .withColumn("_min_dst", F.min("dst").over(by_src)),
+        F.count_if(F.col("dst") == F.col("_min_dst")).alias("n"),
+    )
+    return ew, release, seen["n"]
+
+
 def _pagerank_oracle() -> str:
     # Unrolled fixed-iteration CTE chain: r0 = 1/n, r{k} from r{k-1}.
     steps = []
@@ -98,9 +130,8 @@ def _pagerank_oracle() -> str:
 
 @register(
     "graph_pagerank",
-    # Round-11 bench rotation (VERDICT r10 #6): the bounded-round bench
-    # representative of the converged-PageRank discipline — same
-    # per-round plan (one rank shuffle + checkpoint) at a fixed 3
+    # The bounded-round bench representative of the converged-PageRank
+    # discipline — same per-round plan (one rank shuffle) at a fixed 3
     # rounds, so its timing tracks the iterative engine path without
     # the convergence-length variance a headline pin cannot carry.
     headline=True,
@@ -126,37 +157,24 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_nodes rows, small) shuffle to them each round; skewed hub nodes
     split via AQE exactly like any hot aggregation key.
     """
-    # Round-11 (optimization round, guide §1.2/§5): the previous
-    # persist() was unpersisted in a `finally` that ran when this
-    # function RETURNED — i.e. before the caller's action executed —
-    # so the CacheManager never substituted the cached relation and
-    # every iteration re-ran the orders⋈lineitem edge build (measured:
-    # 3.87 s median for 3 iterations at sf0.1). An eager
-    # ``localCheckpoint`` materializes (edges ⋈ outdeg) exactly once
-    # per invocation with no unpersist bookkeeping; the RDD is freed
-    # with the DataFrame. 3.87 s -> see OPTIMIZATION_r11.md.
-    from pyspark.sql import Window
-
-    edges = _edges(spark, sf_dir)
-    # outdeg rides a window count over the SAME src partitioning the
-    # union already needs — one exchange of the edge stream, replacing
-    # the separate degree aggregation + equi-join (guide §2.4: two
-    # operations keyed the same way share one exchange; measured warm
-    # 2.1-2.5 s -> 1.1-1.3 s for the ew build at sf0.1).
-    ew = edges.withColumn(
-        "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint(eager=True)
-    nodes = ew.select(F.col("src").alias("node")).distinct()
-    n = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("r"))
-    # Round-12 (optimization round, guide §3.1 / VERDICT r11 #1): the
-    # rank vector is |V| rows by construction (n is the just-counted
+    ew, _, n = _edges_with_outdeg(spark, sf_dir)
+    ranks = ew.select(F.col("src").alias("node")).distinct().select(
+        "node", F.lit(1.0 / n).alias("r")
+    )
+    # The rank vector is |V| rows by construction (n is the observed
     # value), tiny next to the edge stream — broadcast it into every
     # iteration's join so the checkpointed edge table streams with no
     # per-iteration shuffle OR sort; only the dst aggregation exchanges.
     # Gated on the runtime count (scale-adaptive, see
-    # _RANKS_BROADCAST_MAX); above the gate the prior shuffled shape
-    # stands unchanged.
+    # _RANKS_BROADCAST_MAX); above the gate the shuffled join shape
+    # stands. The float ``sum(r / outdeg)`` depends on the order rows
+    # reach the partial aggregates, and the broadcast and shuffled join
+    # shapes feed them in different orders — so the ranks are stable
+    # only up to the ``round(., 6)`` at the output: the noise sits near
+    # 1e-17 at rank magnitudes ~1/n, but a value that close to a 1e-6
+    # rounding boundary could round differently under the two shapes.
+    # graph_pagerank_converged's integer arithmetic is exactly
+    # order-independent.
     small = n <= _RANKS_BROADCAST_MAX
     for _ in range(_ITERS):
         rhs = F.broadcast(ranks) if small else ranks
@@ -889,58 +907,54 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous edge set through the degree aggregate AND both
     semi-join sides — unrolled naively the logical plan grows ~5^rounds
     and analysis OOMs the driver. Each round therefore ends in an eager
-    ``localCheckpoint``: the materialized edge list (shrinking, ≤ the
-    initial edge count of 16-byte rows) becomes the next round's leaf,
-    keeping plan size constant — the iterative-refinement twin of the
-    pagerank persist pattern. The threshold is a 1-row broadcast
-    crossed into every round's filter.
-
-    Round-11 (optimization round, guide §2.4/§1.2):
+    checkpoint: the materialized edge list (shrinking, ≤ the initial
+    edge count of 16-byte rows) becomes the next round's leaf, keeping
+    plan size constant. The threshold is a literal in every round's
+    filter.
 
     * ONE edge build per invocation — ``e`` is checkpointed FIRST and
-      the node set / threshold derive from the checkpointed leaf
-      (previously the kk job and the e-checkpoint job each re-ran the
-      lineitem self-join + distinct).
+      the node set / threshold derive from the checkpointed leaf.
     * the kept set is checkpointed per round (it is the small side of
       both semi-joins AND the convergence scalar), so the degree
       aggregate runs once per round, not once per consumer.
+    * every count the loop reads — |E|, |V|, the kept-set size and
+      |e_i| after each prune — is observed by the checkpoint job that
+      materializes that set, so a round is one kept-set job plus one
+      prune job, with no count jobs (round 1 adds the degree-table
+      checkpoint its threshold needs).
     * early FIXPOINT exit inside the fixed budget: kept sets shrink
       monotonically (e_i ⊆ e_{i-1} ⇒ degrees non-increasing ⇒
       keep_{i+1} ⊆ keep_i), so an unchanged kept-set COUNT is an
       unchanged SET; an unchanged kept set filters e to itself, making
       every remaining round the identity — the round-8 census equals
       the fixpoint census EXACTLY (same rule the graph_kcore_converged
-      oracle re-derives in SQL). Detection reads the count of the
-      already-materialized kept set: bounded scalar metadata, the
-      sanctioned collect class.
+      oracle re-derives in SQL).
     * the semi-join build side is broadcast explicitly when the
-      just-measured kept count is broadcast-safe (the planner sees an
-      RDD leaf with no stats; the driver KNOWS the row count) — at
+      observed kept count is broadcast-safe (the planner sees an RDD
+      leaf with no stats; the driver KNOWS the row count) — at
       larger-than-broadcast node sets the plain semi join shape is
       kept and AQE decides.
+
+    Every checkpoint is released as soon as its consumer is
+    materialized; the query fully materializes before returning, so
+    nothing stays persisted after it.
     """
     from hadoop_map_reduce_spark.checkpoint import local_checkpoint
 
-    # Round-12: every per-round checkpoint is taken through the tracked
-    # local_checkpoint helper and released as soon as its consumer is
-    # materialized (ADVICE r11 #3 — the bare localCheckpoint blocks were
-    # only freed at driver GC, accumulating across bench invocations in
-    # one session); this query fully materializes before returning, so
-    # nothing stays persisted after it.
-    e, rel_e = local_checkpoint(_copurchase_edges(spark, sf_dir))
-    n_edges0 = e.count()
+    n_rows = F.count(F.lit(1)).alias("n")
+    e, rel_e, seen = local_checkpoint(_copurchase_edges(spark, sf_dir), n_rows)
+    n_edges0 = seen["n"]
     e_cnt = n_edges0  # |e_i|, tracked per round (also the final census)
     par = spark.sparkContext.defaultParallelism
     # The threshold k = floor(2|E|/|V|) derives from round 1's degree
     # table (its row count IS |V|: every node of an edge list has
-    # degree >= 1) — the separate node-distinct and threshold jobs of
-    # the previous shape are gone, and the division is EXACT integer
-    # arithmetic, the same `2*e // v` the DuckDB oracle computes (the
-    # old floor(double) agreed only up to double rounding).
+    # degree >= 1), in EXACT integer arithmetic — the same `2*e // v`
+    # the DuckDB oracle computes.
     k_val: int | None = None
     n_nodes: int | None = None
     prev_cnt: int | None = None  # |keep_{i-1}|
     keep_cnt: int | None = None  # |keep_i|
+    rel_deg: Callable[[], None] = lambda: None
     for _ in range(_KCORE_ROUNDS):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -949,23 +963,20 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         if k_val is None:
-            # Round 1 only: |V| comes from the materialized degree
-            # table; later rounds checkpoint just the (smaller) kept
-            # set — one eager job per round, not two.
-            deg, rel_keep = local_checkpoint(deg)
-            n_nodes = deg.count()
-            k_val = (2 * n_edges0) // n_nodes if n_nodes else None
-            if k_val is None:
-                keep_cnt = 0
-                prev_cnt = 0
-                rel_keep()
+            # Round 1 only: the threshold needs |V|, the degree table's
+            # row count, before the kept set can be cut from it.
+            deg, rel_deg, seen = local_checkpoint(deg, n_rows)
+            n_nodes = seen["n"]
+            if not n_nodes:
+                keep_cnt = prev_cnt = 0
+                rel_deg()
                 break
-            keep = deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-        else:
-            keep, rel_keep = local_checkpoint(
-                deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-            )
-        cnt = keep.count()
+            k_val = (2 * n_edges0) // n_nodes
+        keep, rel_keep, seen = local_checkpoint(
+            deg.filter(F.col("d") >= F.lit(k_val)).select("node"), n_rows
+        )
+        rel_deg()  # idempotent: frees round 1's degree table once
+        cnt = seen["n"]
         if keep_cnt is not None and cnt == keep_cnt:
             # Fixpoint: this round's kept set equals the previous
             # round's, so e is already filtered to it and every
@@ -980,17 +991,16 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = e.join(
             kb.select(F.col("node").alias("u")), "u", "left_semi"
         ).join(kb.select(F.col("node").alias("v")), "v", "left_semi")
-        # Tail-round coalesce (guide §2.2): |e_i| <= |e_{i-1}| = e_cnt,
-        # so sizing by the previous count can only over-provision; the
-        # guard keeps at-scale rounds (edge count >> cores) untouched.
+        # Tail-round coalesce: |e_i| <= |e_{i-1}| = e_cnt, so sizing by
+        # the previous count can only over-provision; the guard keeps
+        # at-scale rounds (edge count >> cores) untouched.
         p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
         if 0 < p < par:
             pruned = pruned.coalesce(p)
-        new_e, rel_new = local_checkpoint(pruned)
+        new_e, rel_new, seen = local_checkpoint(pruned, n_rows)
         rel_e()
         rel_keep()
-        e, rel_e = new_e, rel_new
-        e_cnt = e.count()
+        e, rel_e, e_cnt = new_e, rel_new, seen["n"]
     n_prev = prev_cnt if prev_cnt is not None else n_nodes
     rel_e()
     return spark.createDataFrame(
@@ -1079,49 +1089,39 @@ def _kcore_converged_oracle() -> str:
     oracle=_kcore_converged_oracle(),
 )
 def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VERDICT r10 #4: the convergence discipline of
-    graph_pagerank_converged applied back to the k-core peel — an
-    unconverged peel now raises instead of silently reporting the
-    budget-round state as "the k-core". Per-round plan handling is the
-    bounded twin's (eager localCheckpoint per round keeps the
-    otherwise ~5^rounds logical plan constant-size; threshold rides as
-    a 1-row broadcast); the per-round kept/edge counts the detection
-    already needs ARE the result rows, assembled driver-side (≤ budget
-    rows — bounded metadata, the sanctioned collect class). At 100 TB:
-    round count is degree-distribution-bounded (measured 3-4 here),
-    each round shuffles narrow integer pairs only, and detection adds
-    one count action per round — the same scalar the peel's own
-    progress logging would read.
+    """The convergence discipline of graph_pagerank_converged applied
+    to the k-core peel — an unconverged peel raises instead of silently
+    reporting the budget-round state as "the k-core". Per-round plan
+    handling is the bounded twin's (eager checkpoint per round keeps
+    the otherwise ~5^rounds logical plan constant-size; the threshold
+    is a literal); the per-round kept/edge counts the detection already
+    needs ARE the result rows, assembled driver-side (≤ budget rows —
+    bounded metadata). At 100 TB: round count is
+    degree-distribution-bounded (measured 3-4 here), each round
+    shuffles narrow integer pairs only, and detection costs no job of
+    its own — the counts are observed by the checkpoint jobs.
 
     Monotonicity argument for exact detection: e_i ⊆ e_{i-1} ⇒ every
     degree is non-increasing ⇒ keep_{i+1} ⊆ keep_i; equal COUNTS of
     nested finite sets force equal sets, and an unchanged kept set
     filters e to itself — a true fixpoint, not an oscillation.
     """
-    # Round-11 (optimization round): same single-edge-build +
-    # checkpointed-keep restructure as graph_kcore_bounded — e is
-    # checkpointed FIRST (nodes/threshold derive from the leaf, so the
-    # lineitem self-join runs once, not three times), the kept set is
-    # checkpointed before counting (previously keep.count() re-ran the
-    # degree aggregate the e-prune job had just computed), and the
-    # semi-join build side is broadcast while the just-measured kept
-    # count is broadcast-safe. Trajectory values are unchanged: at the
-    # fixpoint round e_i == e_{i-1}, so the recorded edge count is the
-    # previous round's materialized count — no extra prune needed.
     from hadoop_map_reduce_spark.checkpoint import local_checkpoint
 
-    # Round-12: tracked checkpoints with per-round release + tail-round
-    # coalesce, exactly as graph_kcore_bounded (the trajectory values
-    # are untouched — release/coalesce only manage block storage and
-    # task counts of already-materialized leaves).
-    e, rel_e = local_checkpoint(_copurchase_edges(spark, sf_dir))
-    e_cnt = e.count()
+    # Same single edge build, checkpointed kept set, observed counts,
+    # per-round release and tail-round coalesce as graph_kcore_bounded
+    # (release/coalesce only manage block storage and task counts of
+    # already-materialized leaves, never the trajectory values).
+    n_rows = F.count(F.lit(1)).alias("n")
+    e, rel_e, seen = local_checkpoint(_copurchase_edges(spark, sf_dir), n_rows)
+    e_cnt = seen["n"]
     par = spark.sparkContext.defaultParallelism
     # Threshold from round 1's degree table, exact integer division —
-    # see graph_kcore_bounded (same round-11 restructure).
+    # see graph_kcore_bounded.
     k_val: int | None = None
     prev_kept: int | None = None
     trajectory: list[tuple[int, int, int]] = []
+    rel_deg: Callable[[], None] = lambda: None
     for i in range(1, _KCORE_MAX_ROUNDS + 1):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -1130,15 +1130,14 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         if k_val is None:
-            deg, rel_keep = local_checkpoint(deg)
-            prev_kept = deg.count()  # |V|: round 0 keeps every node
+            deg, rel_deg, seen = local_checkpoint(deg, n_rows)
+            prev_kept = seen["n"]  # |V|: round 0 keeps every node
             k_val = (2 * e_cnt) // prev_kept
-            keep = deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-        else:
-            keep, rel_keep = local_checkpoint(
-                deg.filter(F.col("d") >= F.lit(k_val)).select("node")
-            )
-        kept = keep.count()
+        keep, rel_keep, seen = local_checkpoint(
+            deg.filter(F.col("d") >= F.lit(k_val)).select("node"), n_rows
+        )
+        rel_deg()  # idempotent: frees round 1's degree table once
+        kept = seen["n"]
         if kept == prev_kept:
             # Fixpoint: the kept set equals last round's, e is already
             # filtered to it (e_i == e_{i-1}), so this round's edge
@@ -1157,11 +1156,10 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         p = (e_cnt + _KCORE_COALESCE_ROWS - 1) // _KCORE_COALESCE_ROWS
         if 0 < p < par:
             pruned = pruned.coalesce(p)
-        new_e, rel_new = local_checkpoint(pruned)
+        new_e, rel_new, seen = local_checkpoint(pruned, n_rows)
         rel_e()
         rel_keep()
-        e, rel_e = new_e, rel_new
-        e_cnt = e.count()
+        e, rel_e, e_cnt = new_e, rel_new, seen["n"]
         trajectory.append((i, kept, e_cnt))
         prev_kept = kept
     rel_e()
@@ -1218,14 +1216,16 @@ _CC_LOGROUND_SQL = """
 def graph_cc_loground(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge construction uses the repo's own distributed ranking
     operator (no skewed 5-partition window): global rank over
-    (priority, orderkey) via range-partition + broadcast prefix-sum
-    offsets, then a rank+1 self-equi-join within the priority emits the
-    path edges. The component loop is
+    (priority, orderkey) via range-partition + prefix-sum offsets from
+    per-partition counts observed by its checkpoint, then a rank+1
+    self-equi-join within the priority emits the path edges. The
+    component loop is
     :func:`~hadoop_map_reduce_spark.operators.clustering.
     connected_components_loground` — per round two grouped mins + two
     equi-joins on 8-byte ids, eager localCheckpoint keeping the plan
-    constant-size, convergence detected from a 1-row checksum (raises
-    rather than returning a partial clustering). Converged by
+    constant-size, convergence detected from a checksum observed by
+    each round's checkpoint (raises rather than returning a partial
+    clustering). Converged by
     construction: there is no n_changed_last_round column because a
     returned result IS the fixpoint."""
     from hadoop_map_reduce_spark.operators.clustering import (
@@ -1363,38 +1363,28 @@ def _pagerank_converged_oracle() -> str:
     oracle=_pagerank_converged_oracle(),
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The graph_cc_loground discipline applied to PageRank (VERDICT r9
-    #5): per-round eager localCheckpoint keeps the plan constant-size
-    (a 77-round lazy chain would otherwise be a 77-deep join tree at
-    analysis time), the previous round's blocks are released once the
-    next is materialized, and convergence is read from a 1-row scalar
-    collect. At 100 TB: edges pre-partition on src once (the
-    checkpoint cache preserves the layout); ranks (n_nodes rows) are
-    the only per-round shuffle; round count is data-bounded at
-    ~log(SCALE)/log(1/damping), independent of graph size.
+    """The graph_cc_loground discipline applied to PageRank: per-round
+    eager checkpoint keeps the plan constant-size (a 77-round lazy
+    chain would otherwise be a 77-deep join tree at analysis time), the
+    previous round's blocks are released once the next is
+    materialized, and convergence is read from ``sum(r)`` observed by
+    the round's checkpoint job — one job per round, no scalar collect.
+    At 100 TB: edges pre-partition on src once (the checkpoint
+    preserves the layout); ranks (n_nodes rows) are the only per-round
+    shuffle; round count is data-bounded at ~log(SCALE)/log(1/damping),
+    independent of graph size.
     """
     from hadoop_map_reduce_spark.checkpoint import local_checkpoint
 
-    from pyspark.sql import Window
-
-    edges = _edges(spark, sf_dir)
-    # Same single-exchange outdeg window as graph_pagerank (round-11).
-    ew, release_ew = local_checkpoint(
-        edges.withColumn(
-            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        )
-    )
+    ew, release_ew, n = _edges_with_outdeg(spark, sf_dir)
     try:
         nodes = ew.select(F.col("src").alias("node")).distinct()
-        n = nodes.count()
         base15 = (15 * (_PR_SCALE // n)) // 100
         ranks = nodes.select("node", F.lit(0).cast("long").alias("r"))
-        # Round-12: same runtime-count-gated rank broadcast as
-        # graph_pagerank — here the win multiplies across the 77-83
-        # rounds (each previously sorted/shuffled the checkpointed edge
-        # stream into a sort-merge join). Integer arithmetic makes the
-        # result order-independent, so the join strategy cannot move a
-        # single bit.
+        # Same runtime-count-gated rank broadcast as graph_pagerank —
+        # here the win multiplies across the 77-83 rounds. Integer
+        # arithmetic makes the result order-independent, so the join
+        # strategy cannot move a single bit.
         small = n <= _RANKS_BROADCAST_MAX
         prev_sum = 0
         release = None
@@ -1403,8 +1393,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same state). Returning at round _PR_MAX_ROUNDS + 1 therefore
         # still returns r_{_PR_MAX_ROUNDS} — exactly the oracle's
         # deepest CTE — while a fixpoint NOT yet reached by the budget
-        # raises below (r10 review: without the +1, a graph converging
-        # exactly at round 100 raised spuriously).
+        # raises below (without the +1, a graph converging exactly at
+        # round 100 would raise spuriously).
         for _rounds in range(1, _PR_MAX_ROUNDS + 2):
             rhs = F.broadcast(ranks) if small else ranks
             nxt = (
@@ -1418,17 +1408,20 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("r")
                 )
             )
-            nxt, next_release = local_checkpoint(nxt)
+            # sum(r) of an empty round reads None, which repeats on the
+            # next round and so ends the loop exactly as an aggregate
+            # collect would.
+            ranks, next_release, seen = local_checkpoint(
+                nxt, F.sum("r").alias("s")
+            )
             if release is not None:
                 release()
             release = next_release
-            ranks = nxt
-            cur_sum = ranks.agg(F.sum("r")).first()[0]
-            if cur_sum == prev_sum:
+            if seen["s"] == prev_sum:
                 return ranks.select(
                     "node", F.col("r").alias("rank_e9")
                 )
-            prev_sum = cur_sum
+            prev_sum = seen["s"]
         raise RuntimeError(
             f"graph_pagerank_converged did not reach its integer "
             f"fixpoint in {_PR_MAX_ROUNDS} rounds; raise "

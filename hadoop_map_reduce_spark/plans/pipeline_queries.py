@@ -358,8 +358,8 @@ def dedup_clusters_loground(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same LSH pair generation (banded equi-join, b=32 r=2), then
     :func:`~hadoop_map_reduce_spark.operators.clustering.
     connected_components_loground`: two grouped mins + two equi-joins
-    per round on 8-byte ids, eager localCheckpoint per round, 1-row
-    checksum convergence — rounds grow with log(component size), not
+    per round on 8-byte ids, eager localCheckpoint per round, checksum
+    convergence observed by that checkpoint — rounds grow with log(component size), not
     cluster-chain diameter. Docs without edges keep themselves as
     representative via the left join (no nodes frame needed — the
     labels cover exactly the edge-touched ids)."""
@@ -398,7 +398,7 @@ def dedup_clusters_loground(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Curriculum staging: rank every document by lexical-diversity "
         "ppm (distinct tokens per million tokens, integer-exact), "
         "split the exact global order into 4 stages with the "
-        "distributed NTILE (range-partition + broadcast prefix "
+        "distributed NTILE (range-partition + observed prefix "
         "offsets — zero single-partition sorts), census per stage. "
         "The easy->hard schedule a curriculum-ordered training run "
         "consumes."
@@ -432,8 +432,8 @@ def pack_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`~hadoop_map_reduce_spark.operators.ranking.with_global_ntile`
     over the (quality_ppm, doc_id) total order — the same machinery as
     events_rfm_segments, exercised here on the corpus table. One token
-    scan, one range exchange, one bounded offsets broadcast, one
-    partial-agg'd census."""
+    scan, one range exchange whose checkpoint observes the
+    per-partition counts, one partial-agg'd census."""
     from hadoop_map_reduce_spark.operators.ranking import (
         with_global_ntile,
     )

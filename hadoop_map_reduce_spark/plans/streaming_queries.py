@@ -515,7 +515,7 @@ def _run_admission_harness(
                 spark,
                 docs.schema,
             )
-            result, release = local_checkpoint(manifest)
+            result, release, _ = local_checkpoint(manifest)
             prev = _NEARDUP_PREV_RELEASE.get(slot)
             if prev is not None:
                 prev()

@@ -1149,10 +1149,13 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One user-keyed aggregation, then three EXACT global NTILEs via
     operators/ranking.with_global_ntile — range-repartition + local
-    row_number + broadcast prefix-sum offsets, so the per-user table
-    (billions of rows at 100 TB of events) is never sorted on one
-    task: the oracle's ``NTILE() OVER (ORDER BY ...)`` semantics with
-    zero single-partition exchanges (plan-sweep enforced). Each metric
+    row_number, eagerly checkpointed, with the per-partition row counts
+    observed by that checkpoint job; the prefix-sum offsets and the
+    bucket sizes come back as driver-side literals. The per-user table
+    (billions of rows at 100 TB of events) is never sorted on one task:
+    the oracle's ``NTILE() OVER (ORDER BY ...)`` semantics with zero
+    single-partition exchanges (plan-sweep enforced), and one Spark job
+    chain per NTILE with no count, offsets or total jobs. Each metric
     order carries the user_id tie-break that makes the order total —
     the precondition for the distributed rank's invariance."""
     from hadoop_map_reduce_spark.operators.ranking import (

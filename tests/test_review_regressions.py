@@ -1,5 +1,6 @@
 """Regression pins for defects found in review: as-of payload stitching,
-connected-components convergence, salted-join semantics, ANN multi-probe."""
+connected-components convergence, salted-join semantics, ANN multi-probe,
+the literal-array error message."""
 
 from __future__ import annotations
 
@@ -92,3 +93,14 @@ def test_apply_cdc_semantics(spark):
     )
     got = {r.k: r.v for r in apply_cdc(target, batch, on=["k"]).collect()}
     assert got == {1: "a", 2: "b2", 4: "d", 9: "i9"}
+
+
+def test_doubles_sql_names_itself_on_non_finite():
+    """``doubles_sql`` is called directly (the ADC trees in
+    operators/pq.py), so its error must name it, not ``lit_doubles``."""
+    from hadoop_map_reduce_spark.functions.vectors import doubles_sql
+
+    assert doubles_sql([[1.0, 2.5]]) == "array(array(1.0D,2.5D))"
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="^doubles_sql: non-finite literal$"):
+            doubles_sql([0.0, bad])
